@@ -23,6 +23,17 @@ This is the Spark-first replacement for the reference's storage backends
 - **Maturity** (K6): recomputed, never stored — ``matured`` is
   ``number <= tip - depth`` (reference mutates rows in place,
   sqlite3.rs:213-228; a computed view is both cheaper and can't go stale).
+- **Reads**: every table scan is built from a declared schema — the
+  table's row schema (``schemas.py``) plus its partition columns with
+  pinned types (``block_bucket`` long, as ``_bucket`` writes it;
+  ``address`` string, so an all-digit token address is never inferred as
+  a number). Spark therefore runs no schema-inference job over parquet
+  footers, and a view costs only the job(s) of its own action; an
+  unwritten table reads as an empty frame of the same schema. The
+  maturity view's tip comes from parquet footer statistics (no job) and
+  is read BEFORE the frame is built, so an append landing in between can
+  only add rows the tip does not cover: maturity may be under-reported,
+  never over-reported.
 - **Reorg detection** (K10): the reference discovers reorgs via PK-conflict
   on insert (etl.rs:147-169); append-only Parquet has no PK, so we check
   explicitly: an incoming header whose ``parent_hash`` disagrees with the
@@ -36,7 +47,7 @@ import os
 import shutil
 import threading
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .schemas import BLOCK_SCHEMA, TOKEN_TRANSFER_SCHEMA, TRANSACTION_SCHEMA
 
@@ -57,6 +68,30 @@ _PARTITION_COLS = {
     BLOCKS: ["block_bucket"],
     TRANSACTIONS: ["block_bucket"],
     TOKEN_TRANSFERS: ["address", "block_bucket"],
+}
+#: Pinned partition-column types: partition inference would read
+#: ``block_bucket`` back as int and an all-digit ``address`` as a number.
+_PARTITION_TYPES = {"block_bucket": T.LongType(), "address": T.StringType()}
+#: What each table's parquet files hold: the row schema minus the
+#: partition columns, nullable as every file-source column reads.
+_DATA_SCHEMAS = {
+    name: T.StructType(
+        [
+            T.StructField(f.name, f.dataType, True)
+            for f in schema.fields
+            if f.name not in _PARTITION_COLS[name]
+        ]
+    )
+    for name, schema in _SCHEMAS.items()
+}
+#: The declared read schema: data columns, then the partition columns in
+#: layout order — the exact order a schema-inferring read produces.
+_READ_SCHEMAS = {
+    name: T.StructType(
+        _DATA_SCHEMAS[name].fields
+        + [T.StructField(c, _PARTITION_TYPES[c], True) for c in _PARTITION_COLS[name]]
+    )
+    for name in _SCHEMAS
 }
 #: Natural row identity per table — the Spark-side replacement for the
 #: reference's PRIMARY KEYs (DDL sqlite3.rs:68-108; insert-conflict handling
@@ -287,7 +322,7 @@ class Lake:
             return out
         keys = list(_NATURAL_KEY[name])
         existing = (
-            self.spark.read.parquet(self.path(name))
+            self._scan(name)
             .filter(F.col("block_bucket").isin(overlap))
             .select(*keys)
         )
@@ -330,8 +365,21 @@ class Lake:
         thread's checkpoint job (one job materializes the chunk AND
         probes it, overlapped with the previous chunk's ingest), so the
         ingest-path pool here shrinks to the three sink writes. Same
-        math, same marker rules; ``None`` keeps the in-pool probe."""
+        math, same marker rules; ``None`` keeps the in-pool probe. It must
+        lie in ``[height_range[0] - 1, height_range[1]]`` (the vacuous
+        prefix up to the whole range), else ``ValueError`` before anything
+        is written: a stale or foreign value would advance the marker past
+        heights this group never delivered."""
         from concurrent.futures import ThreadPoolExecutor
+
+        if verified_hi is not None and (
+            height_range is None
+            or not height_range[0] - 1 <= verified_hi <= height_range[1]
+        ):
+            raise ValueError(
+                f"verified_hi={verified_hi} outside height_range={height_range}"
+                " (must be within [lo - 1, hi])"
+            )
 
         todo = [
             (name, df)
@@ -515,10 +563,21 @@ class Lake:
 
     # --- reads -----------------------------------------------------------------
 
+    def _scan(self, name: str, *leaf_dirs: str) -> DataFrame:
+        """The lake's one parquet read, always with a declared schema (no
+        footer-sampling inference job). With ``leaf_dirs`` it reads only
+        those ``block_bucket=*`` leaf dirs, whose files hold the data
+        columns alone."""
+        if leaf_dirs:
+            schema, paths = _DATA_SCHEMAS[name], leaf_dirs
+        else:
+            schema, paths = _READ_SCHEMAS[name], (self.path(name),)
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def read(self, name: str) -> DataFrame:
         if not self.exists(name):
-            return self.spark.createDataFrame([], _SCHEMAS[name])
-        return self.spark.read.parquet(self.path(name))
+            return self.spark.createDataFrame([], _READ_SCHEMAS[name])
+        return self._scan(name)
 
     def blocks(self) -> DataFrame:
         return self.read(BLOCKS)
@@ -649,45 +708,58 @@ class Lake:
         """Resume point (reference etl.rs:84-89): max height with the Q1
         fallback chain blocks → transactions → transfers → -1 (the reference
         returns 0 for empty; -1 distinguishes 'nothing synced' from
-        'genesis synced').
+        'genesis synced')."""
+        for name in (BLOCKS, TRANSACTIONS, TOKEN_TRANSFERS):
+            if name in self.modules:
+                tip = self._table_tip(name)
+                if tip is not None:
+                    return tip
+        return -1
+
+    def _table_tip(self, name: str) -> int | None:
+        """Max height of one table, None when it holds no rows.
 
         The tip can only live in the highest ``block_bucket``, so the lookup
         prunes to that one partition via the directory listing and then
         answers from parquet footer statistics alone — a driver-side
         metadata read, no cluster job. At 100 TB this is one bucket's
         footers instead of the whole table, and it runs at every job start
-        (O3) and before every truncate (K8). (On an object store the same
-        role falls to the table format's column stats — e.g. Delta/Iceberg
-        manifest entries — rather than raw footer reads.)"""
-        for name in (BLOCKS, TRANSACTIONS, TOKEN_TRANSFERS):
-            if name in self.modules and self.exists(name):
-                leaves = self._bucket_leaf_dirs(name)
-                top = max(leaves) if leaves else None
-                if top is not None:
-                    m = self._footer_max(name, leaves[top])
-                    if m is not None:
-                        return m
-                if top is None:
-                    df = self.read(name)
-                else:
-                    # read ONLY the top bucket's leaf dirs — skips the
-                    # full-table file listing, not just the file scan
-                    # (block_bucket is the leaf level in every layout)
-                    df = self.spark.read.parquet(*leaves[top])
-                row = df.agg(F.max(_NUMBER_COL[name]).alias("m")).first()
-                if row and row.m is not None:
-                    return int(row.m)
-        return -1
+        (O3), before every truncate (K8) and for every maturity view (K6).
+        (On an object store the same role falls to the table format's
+        column stats — e.g. Delta/Iceberg manifest entries — rather than
+        raw footer reads.)"""
+        if not self.exists(name):
+            return None
+        leaves = self._bucket_leaf_dirs(name)
+        if leaves:
+            top = max(leaves)
+            m = self._footer_max(name, leaves[top])
+            if m is not None:
+                return m
+            # read ONLY the top bucket's leaf dirs — skips the full-table
+            # file listing, not just the file scan (block_bucket is the
+            # leaf level in every layout)
+            df = self._scan(name, *leaves[top])
+        else:
+            df = self.read(name)
+        row = df.agg(F.max(_NUMBER_COL[name]).alias("m")).first()
+        return int(row.m) if row and row.m is not None else None
 
     # --- maturity (K6) -----------------------------------------------------------
 
     def blocks_with_maturity(self, depth: int = MATURITY_DEPTH) -> DataFrame:
         """Blocks with ``matured`` *recomputed* against the current tip —
         the replacement for the reference's in-place UPDATE
-        (sqlite3.rs:213-228, driven at etl.rs:171,318-321,253)."""
+        (sqlite3.rs:213-228, driven at etl.rs:171,318-321,253).
+
+        The tip is the blocks table's footer-statistics max (no job), read
+        BEFORE the frame is built: an append committed in between adds
+        rows above that tip, which read as immature — maturity can lag a
+        concurrent writer, never run ahead of it."""
         from .operators.maintenance import with_maturity
 
-        return with_maturity(self.blocks(), depth)
+        tip = self._table_tip(BLOCKS)
+        return with_maturity(self.blocks(), depth, tip=-1 if tip is None else tip)
 
     # --- partition-scoped delete-and-rewrite core --------------------------------
 
@@ -705,7 +777,7 @@ class Lake:
 
     def _delete_where_locked(self, name: str, heights_pred) -> None:
         num = F.col(_NUMBER_COL[name])
-        df = self.spark.read.parquet(self.path(name))
+        df = self._scan(name)
         buckets = [
             r.block_bucket
             for r in df.filter(heights_pred(num)).select("block_bucket").distinct().collect()
@@ -866,7 +938,7 @@ class Lake:
         # _delete_where and retention_cleanup).
         self._ensure_writer_lock()
         with self.mutex:
-            df = self.spark.read.parquet(self.path(name))
+            df = self._scan(name)
             per_bucket = (
                 df.withColumn("_file", F.input_file_name())
                 .groupBy("block_bucket")

@@ -11,18 +11,25 @@ from pyspark.sql import DataFrame, functions as F
 MATURITY_DEPTH = 5  # reference etl.rs:171,253
 
 
-def with_maturity(blocks: DataFrame, depth: int = MATURITY_DEPTH) -> DataFrame:
+def with_maturity(
+    blocks: DataFrame, depth: int = MATURITY_DEPTH, tip: int | None = None
+) -> DataFrame:
     """K6 — ``matured`` recomputed against the current tip: ``number <=
-    max(number) - depth`` (the reference mutates rows in place at
-    sqlite3.rs:213-228; recompute can't go stale). The tip aggregate
-    broadcasts into a projection — no per-row shuffle."""
-    tip = blocks.agg(F.max("number").alias("_tip"))
+    tip - depth`` (the reference mutates rows in place at
+    sqlite3.rs:213-228; recompute can't go stale). ``tip`` is the chain
+    tip when the caller already knows it (the lake reads it from parquet
+    footers — no job); ``None`` takes the frame's own ``max(number)``, an
+    aggregate broadcast into the projection — no per-row shuffle."""
+
+    def matured(t) -> F.Column:
+        return (F.col("number") <= t - F.lit(depth)).cast("long")
+
+    if tip is not None:
+        return blocks.withColumn("matured", matured(F.lit(tip)))
+    tips = blocks.agg(F.max("number").alias("_tip"))
     return (
-        blocks.crossJoin(F.broadcast(tip))
-        .withColumn(
-            "matured",
-            (F.col("number") <= F.col("_tip") - F.lit(depth)).cast("long"),
-        )
+        blocks.crossJoin(F.broadcast(tips))
+        .withColumn("matured", matured(F.col("_tip")))
         .drop("_tip")
     )
 

@@ -34,6 +34,7 @@ import threading
 from pyspark.sql import SparkSession
 
 from .. import accepts_kwarg
+from ..sources.provider import _normalize_wire_block
 from .tail import RAW_BLOCK_DDL
 
 
@@ -205,10 +206,19 @@ class HeadPoller:
                 "head poller: skipping non-object block reply for %s", hex(number)
             )
             return None
-        return raw
+        # a live node answers camelCase keys, hex quantities and 0x data;
+        # RAW_BLOCK_DDL takes the canonical form the backfill fetch builds
+        norm = _normalize_wire_block(raw)
+        if norm is None:
+            log.warning(
+                "head poller: skipping block reply with no height for %s",
+                hex(number),
+            )
+        return norm
 
     def _drop(self, raws: list[dict]) -> None:
-        """Append one parquet drop. ``coalesce(1)``: a drop is at most
+        """Append one parquet drop of canonical blocks (``_fetch_full``
+        normalizes each reply). ``coalesce(1)``: a drop is at most
         ``batch_size`` blocks — one file per micro-batch is the point."""
         df = self.spark.createDataFrame(raws, RAW_BLOCK_DDL)
         df.coalesce(1).write.mode("append").parquet(self.out_dir)

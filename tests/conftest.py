@@ -22,3 +22,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMALL)
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn) -> (jobs, fn())``: the Spark jobs ``fn`` ran,
+    diffed from the status tracker's job ids outside any job group (so
+    streaming queries left running by other tests never count). The
+    listener bus is drained first: the tracker learns of a job from it
+    asynchronously."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    def run(fn):
+        before = ids()
+        out = fn()
+        return len(ids() - before), out
+
+    return run

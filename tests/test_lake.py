@@ -466,3 +466,116 @@ def test_run_with_retry_fails_fast_on_foreign_writer(spark, tmp_path):
     with pytest.raises(WarehouseLockedError):
         run_with_retry(job, lk, attempts=10)
     assert len(calls) == 1  # no retry loop
+
+
+# --- declared-schema reads ---------------------------------------------------------
+
+
+def test_views_on_never_written_lake_return_no_rows(spark, tmp_path):
+    """Before the first write every view is an empty frame of the declared
+    read schema — the height-pruned ones included, whose bucket predicate
+    needs the ``block_bucket`` partition column."""
+    empty = Lake(spark, str(tmp_path / "never"), bucket_size=BUCKET)
+    headers = spark.createDataFrame(
+        [(3, "h3", "h2")], "number long, hash string, parent_hash string"
+    )
+    views = {
+        "blocks": empty.blocks(),
+        "transactions": empty.transactions(),
+        "token_transfers": empty.token_transfers(),
+        "block_by_number": empty.block_by_number(3),
+        "blocks_in_range": empty.blocks_in_range(0, 5),
+        "blocks_in_range_open": empty.blocks_in_range(0),
+        "block_transactions": empty.block_transactions(3),
+        "transfers_pruned": empty.height_pruned("token_transfers", 0, 5),
+        "blocks_with_maturity": empty.blocks_with_maturity(),
+        "detect_reorgs": empty.detect_reorgs(headers),
+    }
+    assert {k: v.count() for k, v in views.items()} == dict.fromkeys(views, 0)
+    from core_etl_spark.lake import _READ_SCHEMAS
+
+    for name, schema in _READ_SCHEMAS.items():
+        assert empty.read(name).schema == schema
+
+
+def test_lake_reads_run_no_inference_job(lake, count_jobs):
+    """A lake read launches no job before its action (no footer-sampling
+    schema inference), and the maturity tip comes from footer stats."""
+    count_jobs(lambda: lake.block_by_number(17).collect())  # warm
+    assert count_jobs(lake.blocks)[0] == 0
+    jobs, rows = count_jobs(lambda: lake.block_by_number(17).collect())
+    assert jobs == 1 and [r.number for r in rows] == [17]
+    jobs, rows = count_jobs(
+        lambda: lake.blocks_with_maturity()
+        .filter(F.col("number").between(30, 39))
+        .collect()
+    )
+    assert jobs == 1
+    assert {r.number: r.matured for r in rows} == {
+        n: int(n <= N_BLOCKS - 1 - 5) for n in range(30, 40)
+    }
+
+
+def test_all_digit_token_address_roundtrips_as_string(spark, tmp_path):
+    """Partition inference would read ``address=00001234567890`` back as
+    the number 1234567890; the pinned string type keeps it exact."""
+    from core_etl_spark.schemas import TOKEN_TRANSFER_SCHEMA
+
+    addr = "00001234567890"
+    rows = [
+        (5, "f", "t", "1", "tx5", addr, 0, 1, None),
+        (16, "f", "t", "2", "tx16", addr, 0, 1, None),
+    ]
+    lk = Lake(spark, str(tmp_path / "wh"), bucket_size=BUCKET)
+    lk.write_all(token_transfers=spark.createDataFrame(rows, TOKEN_TRANSFER_SCHEMA))
+    got = lk.token_transfers()
+    assert dict(got.dtypes)["address"] == "string"
+    assert {(r.tx_hash, r.address) for r in got.collect()} == {
+        ("tx5", addr), ("tx16", addr)
+    }
+    assert got.filter(F.col("address") == addr).count() == 2
+
+
+def test_declared_read_schema_matches_written_files(lake, spark, tmp_path):
+    """Drift pin: for every table, the declared read schema's data columns
+    equal — in name, type and order — what Spark infers from the files the
+    writers produced (a direct ``write_all`` and the backfill's ingest); a
+    writer that adds or retypes a column fails here instead of the declared
+    read silently dropping it."""
+    from core_etl_spark.lake import _PARTITION_COLS, _READ_SCHEMAS
+    from core_etl_spark.pipeline import backfill
+    from core_etl_spark.sources.provider import FixtureBlockProvider
+
+    ingested = Lake(spark, str(tmp_path / "ingested"), bucket_size=BUCKET)
+    backfill(spark, ingested, FixtureBlockProvider(20, 4), (FX.WATCH_CONTRACT,),
+             chunk_size=BUCKET)
+    for lk in (lake, ingested):
+        for name, declared in _READ_SCHEMAS.items():
+            parts = _PARTITION_COLS[name]
+            inferred = spark.read.parquet(lk.path(name)).schema
+            data = [(f.name, f.dataType) for f in inferred if f.name not in parts]
+            assert [(f.name, f.dataType) for f in declared][: len(data)] == data, name
+            assert [f.name for f in declared][len(data):] == parts, name
+            assert lk.read(name).schema == declared, name
+            assert dict(lk.read(name).dtypes)["block_bucket"] == "bigint"
+
+
+def test_verified_hi_outside_range_is_refused(spark, tmp_path):
+    """``verified_hi`` beyond ``[lo - 1, hi]`` raises before any write and
+    leaves the group-commit marker where it was."""
+    raw = FX.raw_blocks(spark, n_blocks=N_BLOCKS, txs_per_block=4)
+    blocks, txs = T.normalize_blocks(raw), T.normalize_transactions(raw)
+    lk = Lake(spark, str(tmp_path / "wh"), bucket_size=BUCKET)
+    first = blocks.filter(F.col("number") <= 19)
+    lk.write_all(first, txs.filter(F.col("block_number") <= 19),
+                 height_range=(0, 19))
+    assert lk._read_marker() == 19
+    nxt = blocks.filter(F.col("number").between(20, 29))
+    nxt_tx = txs.filter(F.col("block_number").between(20, 29))
+    for bad, rng in ((30, (20, 29)), (18, (20, 29)), (25, None)):
+        with pytest.raises(ValueError, match="verified_hi"):
+            lk.write_all(nxt, nxt_tx, height_range=rng, verified_hi=bad)
+        assert lk._read_marker() == 19
+    assert lk.blocks().count() == 20
+    lk.write_all(nxt, nxt_tx, height_range=(20, 29), verified_hi=29)
+    assert lk._read_marker() == 29

@@ -71,3 +71,80 @@ def test_poller_batches_heads(spark, tmp_path):
         n_files = df.select(df.number).inputFiles()
         assert len(n_files) == 1
         t.close()
+
+
+def _wire_block(number: int) -> dict:
+    """``getBlockByNumber(n, true)`` as a live node answers it: camelCase
+    keys, hex quantities and u256 values, ``0x``-prefixed data."""
+    return {
+        "number": hex(number),
+        "hash": f"0xh{number}",
+        "parentHash": f"0xh{number - 1}",
+        "nonce": "0x00",
+        "sha3Uncles": "0xu",
+        "logsBloom": "0xb",
+        "transactionsRoot": "0xt",
+        "stateRoot": "0xs",
+        "receiptsRoot": "0xr",
+        "miner": "0xm",
+        "difficulty": "0x2a",
+        "totalDifficulty": "0x2a",
+        "extraData": "0x00",
+        "energyLimit": "0x7a1200",
+        "energyUsed": "0x0",
+        "timestamp": hex(1_700_000_000 + number * 7),
+        "size": "0x220",  # wire keys the engine does not store
+        "uncles": [],
+        "transactions": [
+            {
+                "blockHash": f"0xh{number}",
+                "blockNumber": hex(number),
+                "hash": f"0xtx{number}_{i}",
+                "nonce": "0x0",
+                "transactionIndex": hex(i),
+                "from": "0x" + "a" * 44,
+                "to": "0x" + "b" * 44,
+                "value": "0xde0b6b3a7640000",
+                "energy": "0x5208",
+                "energyPrice": "0xa",
+                "input": "0x",
+            }
+            for i in range(2)
+        ],
+    }
+
+
+def test_poller_drops_wire_shape_blocks(spark, tmp_path):
+    """A node in real wire shape: each reply is normalized before the
+    typed drop, so hex quantities no longer fail ``createDataFrame`` and
+    the drop feeds the tail's batch body into the lake."""
+    from core_etl_spark.streaming.tail import RAW_BLOCK_DDL, make_tail_batch_processor
+
+    handlers = dict(HANDLERS)
+    handlers["xcb_getBlockByNumber"] = lambda p: _wire_block(int(p[0], 16))
+    with MockWsRpcServer(handlers) as srv:
+        t = WsJsonRpcTransport(url=srv.url, retries=1, retry_delay=0.1)
+        src = str(tmp_path / "drops")
+        poller = HeadPoller(spark, t, src, batch_size=2, max_blocks=2).start()
+        deadline = time.time() + 10
+        while not srv._sub_ids and time.time() < deadline:
+            time.sleep(0.02)
+        for n in (0, 1):
+            srv.push_head({"number": hex(n), "hash": f"0xh{n}"})
+        poller.join(30)
+        t.close()
+    assert poller.error is None
+    assert poller.blocks_written == 2
+    drop = spark.read.schema(RAW_BLOCK_DDL).parquet(src)
+    rows = {r.number: r for r in drop.collect()}
+    assert sorted(rows) == [0, 1]
+    b1 = rows[1]
+    assert (b1.hash, b1.parent_hash, b1.difficulty) == ("h1", "h0", "42")
+    assert (b1.energy_limit, b1.timestamp) == (8_000_000, 1_700_000_007)
+    tx = b1.transactions[1]
+    assert (tx.transaction_index, tx.value, tx.input) == (1, str(10**18), "")
+
+    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=25)
+    make_tail_batch_processor(lake)(drop, 0)
+    assert lake.latest_block_number() == 1
+    assert lake.transactions().count() == 4
